@@ -203,6 +203,13 @@ object Bench {
         s"""{"before_query":$i,"at_sec":$at,"sec":$s,"wide_sec":$w,"load":"$l"}"""
       }
       .mkString("[", ",", "]")
+    // per memo key across warmups and reps: the first consumer's build
+    // seconds and how many later reads it served
+    val memoJson = graft.ops.SessionMemo.stats.toSeq.sortBy(_._1)
+      .map { case (k, st) =>
+        s""""$k":{"builds":${st.builds},"hits":${st.hits},"build_s":${st.buildSeconds}}"""
+      }
+      .mkString("{", ",", "}")
     val total = mins.map(_._2).filter(_ >= 0).sum
     // failed count rides in the record: a broken headline drops out of
     // the total, which would otherwise read as a round-over-round
@@ -221,7 +228,7 @@ object Bench {
     // suffix-truncated capture retains it whole and it parses
     // standalone.
     println(s"""{"forensics":{"samples":$samplesJson,"offsets":$offsetsJson},"sf":"$sfDir"}""")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"canary":{"start":$canaryStart,"end":$canaryEnd,"wide_start":$wideStart,"wide_end":$wideEnd,"load_start":"$loadStart","load_end":"$loadEnd","mid":$midJson},"queries":$qs,"shuffle_records":$recJson,"shuffle_bytes":$bytJson,"drain":"${if (ledger.drainFellBack) "fallback" else "clean"}","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"canary":{"start":$canaryStart,"end":$canaryEnd,"wide_start":$wideStart,"wide_end":$wideEnd,"load_start":"$loadStart","load_end":"$loadEnd","mid":$midJson},"queries":$qs,"shuffle_records":$recJson,"shuffle_bytes":$bytJson,"drain":"${if (ledger.drainFellBack) "fallback" else "clean"}","memo":$memoJson,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -131,15 +131,12 @@ object BpeOps {
     * registry surfaces over the same training run (merge table, encode,
     * gate) share one memoized result instead of re-iterating. The memo
     * key carries the source file's (size, mtime) — the stamped-index
-    * staleness rule — so a regenerated corpus in the same JVM session
+    * staleness rule — so a regenerated corpus in the same session
     * retrains instead of serving stale merges. */
-  private val trained =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Merge]]
-
   def trainedMerges(spark: SparkSession, dir: String): Seq[Merge] = {
     val src = new java.io.File(s"$dir/documents.parquet")
-    val key = s"$dir@${src.length()}_${src.lastModified()}"
-    trained.getOrElseUpdate(key, trainMerges(spark, dir))
+    SessionMemo(spark, "bpe.merges", s"$dir@${src.length()}_${src.lastModified()}")(
+      trainMerges(spark, dir))
   }
 
   /** The trained merge table as a DataFrame (rank, l, r, pair_freq) —

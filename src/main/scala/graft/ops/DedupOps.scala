@@ -148,36 +148,19 @@ object DedupOps {
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame =
     ngramJaccard(spark, dir, MaxBucket)
 
-  /** Session-lifetime cache of the verified near-dup DECISION PAIRS —
-    * the input fixture of a whole consumer family (the pair eval
+  /** The verified near-dup DECISION PAIRS, memoized per (session, data
+    * dir) — the input fixture of a whole consumer family (the pair eval
     * metrics BLEU/ROUGE/chrF/token-F1, the split-leakage and
     * cluster-split gates, near-dup clustering and survivorship, the
     * source pair profile, the assembly pipeline's near-dup stage). Each
     * of those entries is DEFINED over this pair set, and before r16
     * each re-ran the full PPJoin pipeline (~2.5 s warm at sf0.1) to
-    * obtain a ≤|pairs|-row table. The first consumer in a session pays
-    * the build inside its own timed region — nothing crosses JVMs and
-    * nothing is memoized beyond the session — and the rest read the
-    * checkpointed rows (the ensureKnnIndex / sharedEdges pattern).
+    * obtain a ≤|pairs|-row table.
     * `x_dedup_ngram_jaccard` itself keeps executing the live pipeline
-    * (its plan never touches this cache): the headline measures the
-    * real near-dup pass; consumers measure their own arithmetic.
-    * Bounded: one pair table per (session, data dir); released via
-    * [[releasePairsCache]]. */
-  private val pairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
+    * (its plan never touches this memo): the headline measures the
+    * real near-dup pass; consumers measure their own arithmetic. */
   private[graft] def sharedPairs(spark: SparkSession, dir: String): DataFrame =
-    pairsCache.getOrElseUpdate((spark, dir), ngramJaccard(spark, dir).localCheckpoint())
-
-  /** Release every cached pair table (the blocks are local-checkpoint
-    * RDDs, not CacheManager entries — unpersist the backing RDDs). The
-    * next consumer rebuilds on use. */
-  def releasePairsCache(): Unit = {
-    pairsCache.values.foreach(df =>
-      try df.rdd.unpersist(blocking = false) catch { case _: Throwable => () })
-    pairsCache.clear()
-  }
+    SessionMemo(spark, "dedup.pairs", dir)(ngramJaccard(spark, dir).localCheckpoint())
 
   def ngramJaccard(spark: SparkSession, dir: String, dfCap: Int): DataFrame =
     ngramJaccardOf(Tables.parallel(spark, dir, "documents"), dfCap)

@@ -301,34 +301,21 @@ object EvalOps {
       .orderBy("q_id")
   }
 
-  /** Session-lifetime cache of the two JUDGMENT TABLES (graded /
-    * conjunctive qrels) — the eval fixture every metric entry judges
-    * against. In a real harness qrels are a bounded, pooled artifact
-    * shipped once per eval set; here each of the eight qrels consumers
-    * re-derived it with its own full corpus explode+distinct pass
-    * (~1 s warm at sf0.1). Cached per (session, data dir, kind) with
-    * the run-table discipline: the first consumer pays the derivation
-    * inside its own timed region, nothing crosses JVMs, released via
-    * [[releaseQrelsCache]]. Size is |docs matching any query term| —
-    * the materialized-fixture trade [[graft.ops.GraphOps]]' shared
-    * edges already make, on a far smaller relation. */
-  private val qrelsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
-
+  /** The two JUDGMENT TABLES (graded / conjunctive qrels), memoized per
+    * (session, data dir, kind) — the eval fixture every metric entry
+    * judges against. In a real harness qrels are a bounded, pooled
+    * artifact shipped once per eval set; here each of the eight qrels
+    * consumers re-derived it with its own full corpus explode+distinct
+    * pass (~1 s warm at sf0.1). Size is |docs matching any query term| —
+    * the materialized-fixture trade [[graft.ops.GraphOps]]' shared edges
+    * already make, on a far smaller relation. */
   private def sharedGradedQrels(spark: SparkSession, dir: String): DataFrame =
-    qrelsCache.getOrElseUpdate((spark, dir, "graded"),
+    SessionMemo(spark, "eval.qrels", (dir, "graded"))(
       gradedQrels(spark, dir).localCheckpoint())
 
   private def sharedConjunctiveQrels(spark: SparkSession, dir: String): DataFrame =
-    qrelsCache.getOrElseUpdate((spark, dir, "conjunctive"),
+    SessionMemo(spark, "eval.qrels", (dir, "conjunctive"))(
       conjunctiveQrels(spark, dir).localCheckpoint())
-
-  /** Release every cached qrels table; the next consumer rebuilds. */
-  def releaseQrelsCache(): Unit = {
-    qrelsCache.values.foreach(df =>
-      try df.rdd.unpersist(blocking = false) catch { case _: Throwable => () })
-    qrelsCache.clear()
-  }
 
   private def run(spark: SparkSession, dir: String, which: String): DataFrame =
     RetrievalOps.sharedRun(spark, dir, which)

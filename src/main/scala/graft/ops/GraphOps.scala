@@ -82,24 +82,6 @@ object GraphOps {
     half.union(half.select(col("dst").as("src"), col("src").as("dst")))
   }
 
-  // ------------------------------------------------------------------
-  // Session-lifetime graph caches — registered and releasable
-  // ------------------------------------------------------------------
-
-  /** Every persist that deliberately outlives its call (the
-    * materialized-index pattern pageRank documents) is tracked here, so
-    * sweeps and tests can release graph storage DETERMINISTICALLY
-    * instead of waiting on ContextCleaner GC (r15 ADVICE: anonymous
-    * session-lifetime persists had no release path). CacheManager
-    * dedupes identical plans, so re-registering a rebuilt DataFrame adds
-    * a reference, never a second copy of the data. */
-  private val sessionCaches =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[DataFrame]()
-
-  private def registerSessionCache(df: DataFrame): DataFrame = {
-    sessionCaches.add(df); df
-  }
-
   /** Run `body` (plan CONSTRUCTION and the eager actions inside it)
     * with AQE off, restoring the ambient setting after. Why the
     * iterative cores (pageRank, HITS) want static planning: their
@@ -132,53 +114,23 @@ object GraphOps {
     if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) (df, false)
     else (df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), true)
 
-  /** Release every registered session-lifetime graph cache (blocking).
-    * Safe to call at any point: the next graph entry rebuilds on use. */
-  def releaseSessionCaches(): Unit = {
-    val it = sessionCaches.iterator()
-    while (it.hasNext) {
-      try it.next().unpersist(blocking = true)
-      catch { case _: Throwable => () }
-    }
-    sessionCaches.clear()
-    sharedEdgesCache.clear()
-    graphState.clear()
-  }
-
-  private val sharedEdgesCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** pageRankCore's pinned (nodes, annotated edges) pair per distinct
-    * input graph, keyed by the input's canonicalized plan — see the
-    * memo comment inside [[pageRankCore]]. */
-  private val graphState = scala.collection.concurrent.TrieMap.empty[
-    (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-    (DataFrame, DataFrame)]
-
   /** ONE pinned copy of the symmetrized purchase-edge list per
     * (session, data dir) — the shared spine of the whole graph family.
-    * Before this cache every one-shot entry (assortativity, rich club,
+    * Before this memo every one-shot entry (assortativity, rich club,
     * k-hop, k-core, modularity, pagerank, ppr) re-ran the fact join +
     * distinct + symmetrize from parquet (4–6.5 s each in the r15 sf0.1
-    * sweep); now the FIRST graph entry in a session pays the build
-    * (inside its own timed region — nothing is precomputed across JVMs
-    * or keyed on data contents) and the rest read executor storage.
-    * Bounded: one |E|-row copy per distinct data dir. Released via
-    * [[releaseSessionCaches]]. */
+    * sweep); the rest now read executor storage. Bounded: one |E|-row
+    * copy per distinct data dir. */
   private[ops] def sharedEdges(spark: SparkSession, dir: String): DataFrame =
-    sharedEdgesCache.getOrElseUpdate((spark, s"sym:$dir"), {
-      registerSessionCache(edgesOf(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    })
+    SessionMemo(spark, "graph.sym", dir)(edgesOf(spark, dir)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** The co-purchase analogue of [[sharedEdges]] for the triangle /
     * transitivity pair (a DIFFERENT graph: support-filtered part
     * co-occurrence, see [[coEdges]]). */
   private[ops] def sharedCoEdges(spark: SparkSession, dir: String): DataFrame =
-    sharedEdgesCache.getOrElseUpdate((spark, s"co:$dir"), {
-      registerSessionCache(coEdges(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    })
+    SessionMemo(spark, "graph.co", dir)(coEdges(spark, dir)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** The DIRECTED supplier→customer half for [[hits]] — derived from
     * [[sharedEdges]] (supplier nodes are even, so filtering the
@@ -196,20 +148,20 @@ object GraphOps {
     * long before |V| scores stress a shuffle-hash build side. */
   private[ops] def sharedDirectedEdgesBy(spark: SparkSession, dir: String,
       key: String): DataFrame =
-    sharedEdgesCache.getOrElseUpdate((spark, s"dir-$key:$dir"), {
-      val df = registerSessionCache(sharedEdges(spark, dir)
+    SessionMemo(spark, "graph.directed", (key, dir)) {
+      val df = sharedEdges(spark, dir)
         .filter(col("src") % 2 === 0)
         .repartition(col(key))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      // materialize NOW (first consumer pays, the sharedEdges pattern):
-      // an unmaterialized cached plan is AQE-wrapped with isFinalPlan
-      // false and reports no output partitioning, so a consumer planned
-      // against it re-exchanges the edge rows the repartition above
-      // already placed; once the final plan exists the keyed layout is
-      // visible and every half-step join plans exchange-free.
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // materialize NOW: an unmaterialized cached plan is AQE-wrapped
+      // with isFinalPlan false and reports no output partitioning, so a
+      // consumer planned against it re-exchanges the edge rows the
+      // repartition above already placed; once the final plan exists the
+      // keyed layout is visible and every half-step join plans
+      // exchange-free.
       df.count()
       df
-    })
+    }
 
   def pageRank(spark: SparkSession, dir: String): DataFrame =
     pageRankOf(sharedEdges(spark, dir))
@@ -274,31 +226,28 @@ object GraphOps {
     // per rep (ledger: a flat 1.10M-record column that should have been
     // a one-time build). Returning the SAME Dataset objects makes every
     // later pageRank/PPR over this graph read pinned storage outright.
-    val (nodes, edges0) = graphState.getOrElseUpdate(
-      (rawEdges.sparkSession, rawEdges.queryExecution.analyzed.canonicalized), {
-        val nd = registerSessionCache(
-          rawEdges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-            .select(col("src").as("node"), col("deg"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        // persist the degree-annotated edge list: every one of the Iters
-        // rounds joins it, and without the cache the whole upstream
-        // lineage (fact join + distinct + symmetrize) re-executes per
-        // round — the production pattern (ClusterOps does the same). The
-        // deg side reads the nodes cache (same plan, renamed back), so
-        // the aggregate runs once. The SHUFFLE_HASH hint pins the
-        // annotation join to a shuffle join so the CACHED rows come out
-        // hash-partitioned on src — the key every iteration's rank join
-        // probes. Left to AQE, the tiny deg side broadcasts and the
-        // cache inherits the raw union's partitioning, which re-bills a
-        // full-|E| exchange to EVERY iteration of EVERY query over this
-        // graph; one up-front |E| exchange into the cache amortizes
-        // across the session instead.
-        val ed = registerSessionCache(rawEdges
-          .join(nd.select(col("node").as("src"), col("deg")).hint("shuffle_hash"),
-            Seq("src"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        (nd, ed)
-      })
+    val graph = rawEdges.queryExecution.analyzed.canonicalized
+    val nodes = SessionMemo(rawEdges.sparkSession, "graph.nodes", graph)(
+      rawEdges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+        .select(col("src").as("node"), col("deg"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // persist the degree-annotated edge list: every one of the Iters
+    // rounds joins it, and without the cache the whole upstream
+    // lineage (fact join + distinct + symmetrize) re-executes per
+    // round — the production pattern (ClusterOps does the same). The
+    // deg side reads the nodes cache (same plan, renamed back), so
+    // the aggregate runs once. The SHUFFLE_HASH hint pins the
+    // annotation join to a shuffle join so the CACHED rows come out
+    // hash-partitioned on src — the key every iteration's rank join
+    // probes. Left to AQE, the tiny deg side broadcasts and the
+    // cache inherits the raw union's partitioning, which re-bills a
+    // full-|E| exchange to EVERY iteration of EVERY query over this
+    // graph; one up-front |E| exchange into the cache amortizes
+    // across the session instead.
+    val edges0 = SessionMemo(rawEdges.sparkSession, "graph.annotated", graph)(rawEdges
+      .join(nodes.select(col("node").as("src"), col("deg")).hint("shuffle_hash"),
+        Seq("src"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // driver values: |V|, max out-degree, and the seed-set size, fused
     // into ONE bounded scalar action (max over node-level degrees ≡ max
     // over edge rows; the seed count rides the same pass instead of a
@@ -326,10 +275,11 @@ object GraphOps {
     // rebuild joins it (nodes itself is a distinct-agg over the cache).
     val spine =
       if (!salted) nodes
-      else registerSessionCache(nodes.select(col("node"),
-        explode(when(col("deg") >= hotDegree, sequence(lit(0), lit(Salts - 1)))
-          .otherwise(array(lit(0)))).as("salt"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      else SessionMemo(rawEdges.sparkSession, "graph.spine", (graph, hotDegree))(
+        nodes.select(col("node"),
+          explode(when(col("deg") >= hotDegree, sequence(lit(0), lit(Salts - 1)))
+            .otherwise(array(lit(0)))).as("salt"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val saltCols = if (salted) Seq(col("salt")) else Seq.empty
     // mass denominator: |V| for uniform, |S| for personalized — teleport
     // and initial mass are RankScale-scaled integer shares over it

@@ -100,21 +100,16 @@ object KmeansOps {
     }.toDF("cluster", "dim", "coord").orderBy("cluster", "dim")
   }
 
-  /** Session-lifetime cache of the trained coarse model — K·[[Dim]]
+  /** The trained coarse model, memoized per (session, dir) — K·[[Dim]]
     * longs of bounded driver state, the artifact a vector store ships
     * (the PRF expanded-query-set precedent: a deterministic, bounded
     * driver value every consumer re-derived from scratch). Eight
     * registry entries (the x_cluster_* family, curate_multimodal, both
     * IVF-PQ entries) each re-ran the [[Iters]]-round Lloyd loop — 2
     * extra corpus passes with per-round driver collects apiece — to
-    * rebuild the identical centroid set. First consumer in a session
-    * pays the training inside its timed region; nothing crosses JVMs
-    * and nothing is keyed on data contents. */
-  private val centroidsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(Int, Array[Long])]]
-
+    * rebuild the identical centroid set. */
   private[ops] def fitCentroids(spark: SparkSession, dir: String): Seq[(Int, Array[Long])] =
-    centroidsCache.getOrElseUpdate((spark, dir), fitCentroidsLive(spark, dir))
+    SessionMemo(spark, "kmeans.centroids", dir)(fitCentroidsLive(spark, dir))
 
   /** The final centroid set (shared by [[kmeansCentroids]]; factored so
     * the loop runs once per call, not per row). */

@@ -100,17 +100,13 @@ object PqOps {
     * first [[Ksub]] vectors) → assign → per-(m, code, dim) floor-div
     * means → c1 → final assign. Two assignment rounds keep the unrolled
     * grouped-CTE oracle readable, same trade as [[KmeansOps.Iters]]. */
-  /** Session-lifetime cache of the trained codebooks — M·Ksub·SubDim
-    * longs of bounded driver state (same pattern and rationale as
-    * KmeansOps.fitCentroids' cache): pq_codebooks, pq_encode, topk_pq
-    * and both IVF-PQ entries each re-ran the two training passes to
-    * rebuild the identical model. First consumer pays in its timed
-    * region; nothing crosses JVMs. */
-  private val codebooksCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Map[Int, Seq[(Int, Array[Long])]]]
-
+  /** The trained codebooks, memoized per (session, dir) — M·Ksub·SubDim
+    * longs of bounded driver state (same rationale as
+    * KmeansOps.fitCentroids): pq_codebooks, pq_encode, topk_pq and both
+    * IVF-PQ entries each re-ran the two training passes to rebuild the
+    * identical model. */
   private def fitCodebooks(spark: SparkSession, dir: String): Map[Int, Seq[(Int, Array[Long])]] =
-    codebooksCache.getOrElseUpdate((spark, dir), fitCodebooksLive(spark, dir))
+    SessionMemo(spark, "pq.codebooks", dir)(fitCodebooksLive(spark, dir))
 
   private def fitCodebooksLive(spark: SparkSession, dir: String): Map[Int, Seq[(Int, Array[Long])]] = {
     val sub = subVecs(spark, dir).persist(StorageLevel.MEMORY_AND_DISK)

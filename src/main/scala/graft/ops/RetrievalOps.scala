@@ -110,56 +110,35 @@ object RetrievalOps {
     * chosen terms are bounded driver state (|q|·3 rows), exactly like a
     * query rewriter in a serving tier; round 2 is the ordinary BM25
     * plan over the widened vocabulary. */
-  /** Session-lifetime cache of the PRF-EXPANDED QUERY SET — bounded
-    * driver state (|q| strings), the thing bm25Prf's own scale note
-    * calls "exactly like a query rewriter in a serving tier": the
-    * feedback round (initial retrieval + harvest + term choice) runs
-    * once per (session, corpus); its four consumers (the PRF run itself
-    * plus the RBO/NDCG/PR eval summaries over it) each re-ran the whole
-    * two-stage chain to rebuild five identical query strings (~3-4 s
-    * per entry in the r16 sweep). First consumer pays the harvest
-    * inside its timed region; nothing crosses JVMs. */
-  private val prfExpandedCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(Int, String)]]
-
+  /** The PRF-EXPANDED QUERY SET, memoized per (session, corpus) —
+    * bounded driver state (|q| strings), the thing bm25Prf's own scale
+    * note calls "exactly like a query rewriter in a serving tier": its
+    * four consumers (the PRF run itself plus the RBO/NDCG/PR eval
+    * summaries over it) each re-ran the whole two-stage chain (initial
+    * retrieval + harvest + term choice) to rebuild five identical query
+    * strings (~3-4 s per entry in the r16 sweep). */
   def bm25Prf(spark: SparkSession, dir: String): DataFrame =
-    bm25For(spark, dir,
-      prfExpandedCache.getOrElseUpdate((spark, dir), prfExpand(spark, dir)))
+    bm25For(spark, dir, SessionMemo(spark, "retrieval.prf", dir)(prfExpand(spark, dir)))
 
-  /** Session-lifetime cache of the three SERVED RUN TABLES (bm25 /
-    * rrf-hybrid / prf-expanded bm25) — |q|·k-row bounded relations,
-    * the serving output a ranking-eval harness is DEFINED over. Ten
-    * eval entries (the PR/NDCG/RBO per-query and summary readouts)
-    * each re-ran a full corpus scoring pass (tokenize + tf/df/dl
-    * aggregation + rank, ~25 scheduler jobs, ~3 s warm at sf0.1) to
-    * rebuild the identical ≤|q|·k-row run. The retrieval entries
-    * themselves (x_retrieval_bm25 / x_retrieval_rrf /
+  /** The three SERVED RUN TABLES (bm25 / rrf-hybrid / prf-expanded
+    * bm25), memoized per (session, dir, run) — |q|·k-row bounded
+    * relations, the serving output a ranking-eval harness is DEFINED
+    * over. Ten eval entries (the PR/NDCG/RBO per-query and summary
+    * readouts) each re-ran a full corpus scoring pass (tokenize +
+    * tf/df/dl aggregation + rank, ~25 scheduler jobs, ~3 s warm at
+    * sf0.1) to rebuild the identical ≤|q|·k-row run. The retrieval
+    * entries themselves (x_retrieval_bm25 / x_retrieval_rrf /
     * x_retrieval_bm25_prf) keep executing the live pipeline — their
-    * plans never touch this cache, so the headlines still measure the
+    * plans never touch this memo, so the headlines still measure the
     * real scoring pass; eval consumers measure their own metric
-    * arithmetic (the [[graft.ops.DedupOps.sharedPairs]] pattern). The
-    * first consumer in a session pays the scoring inside its own timed
-    * region; nothing crosses JVMs and nothing is keyed on data
-    * contents. Released via [[releaseRunsCache]]. */
-  private val runCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
-
+    * arithmetic (the [[graft.ops.DedupOps.sharedPairs]] pattern). */
   private[graft] def sharedRun(spark: SparkSession, dir: String,
       which: String): DataFrame =
-    runCache.getOrElseUpdate((spark, dir, which), (which match {
+    SessionMemo(spark, "retrieval.run", (dir, which))((which match {
       case "bm25" => bm25(spark, dir)
       case "rrf"  => rrfHybrid(spark, dir)
       case "prf"  => bm25Prf(spark, dir)
     }).localCheckpoint())
-
-  /** Release every cached run table (local-checkpoint RDDs, not
-    * CacheManager entries — unpersist the backing RDDs). The next
-    * consumer rebuilds on use. */
-  def releaseRunsCache(): Unit = {
-    runCache.values.foreach(df =>
-      try df.rdd.unpersist(blocking = false) catch { case _: Throwable => () })
-    runCache.clear()
-  }
 
   private def prfExpand(spark: SparkSession, dir: String): Seq[(Int, String)] = {
     import spark.implicits._

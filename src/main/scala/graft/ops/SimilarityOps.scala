@@ -256,21 +256,17 @@ object SimilarityOps {
     * from the query vectors — bounded by |queries|, which is small by
     * construction in a top-k serving path. At 100 TB the cell assignment
     * is a materialized column and probes touch |corpus|·nprobe/k rows. */
-  /** Session-lifetime cache of the fitted IVF coarse quantizer — a
-    * seeded MLlib model of k·[[Dim]] doubles, bounded driver state (the
-    * fitCentroids/fitCodebooks precedent): both IVF entries re-ran the
-    * 10-iteration distributed fit (~20 scheduler jobs) per call to
-    * rebuild the identical model. First consumer pays the fit inside
-    * its timed region; nothing crosses JVMs. */
-  private val ivfModelCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), org.apache.spark.ml.clustering.KMeansModel]
-
   def annIvf(spark: SparkSession, dir: String, k: Int = 8, nprobe: Int = 2): DataFrame = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
     val base = corpus(spark, dir)
     val feat = base.withColumn("fv", array_to_vector(col("v")))
-    val model = ivfModelCache.getOrElseUpdate((spark, dir, k),
+    // the fitted coarse quantizer is memoized per (session, dir, k) — a
+    // seeded model of k·Dim doubles, bounded driver state (the
+    // fitCentroids/fitCodebooks precedent): both IVF entries re-ran the
+    // 10-iteration distributed fit (~20 scheduler jobs) per call to
+    // rebuild the identical model
+    val model = SessionMemo(spark, "sim.ivf", (dir, k))(
       new KMeans().setK(k).setSeed(42).setMaxIter(10)
         .setFeaturesCol("fv").setPredictionCol("cell").fit(feat))
     val assigned = model.transform(feat).select(col("vec_id"), col("v"), col("cell"))
@@ -347,13 +343,14 @@ object SimilarityOps {
     * 12/16-bit at this corpus size (wider buckets go empty). */
   val KnnJoinConfig: LshIndexConfig = LshIndexConfig(4, 8, 1, 1337)
 
-  private val planeCache =
-    scala.collection.concurrent.TrieMap.empty[LshIndexConfig, Array[Array[Array[Double]]]]
-  private def planesFor(cfg: LshIndexConfig): Array[Array[Array[Double]]] =
-    planeCache.getOrElseUpdate(cfg, {
+  /** The seeded hyperplanes of `cfg`, drawn once per (session, layout)
+    * instead of per index-row plan. */
+  private def planesFor(spark: SparkSession,
+      cfg: LshIndexConfig): Array[Array[Array[Double]]] =
+    SessionMemo(spark, "sim.lsh_planes", cfg) {
       val rnd = new scala.util.Random(cfg.seed)
       Array.fill(cfg.tables, cfg.planes, Dim)(rnd.nextGaussian())
-    })
+    }
 
   /** kNN JOIN: top-k cosine neighbors for EVERY corpus vector (not a
     * small query set) — the all-corpus companion to annLsh that
@@ -376,7 +373,7 @@ object SimilarityOps {
     * query sets (the serving probe / streaming twin). */
   private def indexRowsOf(vecs: DataFrame,
       cfg: LshIndexConfig = KnnJoinConfig): DataFrame = {
-    val ps = planesFor(cfg)
+    val ps = planesFor(vecs.sparkSession, cfg)
     val sigs = (0 until cfg.tables).map { t =>
       (0 until cfg.planes).map { p =>
         val plane = array(ps(t)(p).map(lit).toIndexedSeq: _*)

@@ -68,23 +68,20 @@ package ops {
       * in-memory columnar reads. Off by default (specs assert on
       * FileScan plan shapes; Bench times the real scan path). */
     @volatile private var cacheInputs = false
-    private val cached =
-      scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
     def enableInputCache(): Unit = { cacheInputs = true }
 
-    /** Turn the cache off and release every persisted table (spec hygiene
-      * — plan-shape tests assert on FileScan nodes). */
+    /** Turn the cache off and release the session memos that hold the
+      * persisted tables (spec hygiene — plan-shape tests assert on
+      * FileScan nodes). */
     def disableInputCache(): Unit = {
       cacheInputs = false
-      cached.values.foreach(_.unpersist())
-      cached.clear()
+      SessionMemo.releaseAll()
     }
 
     def apply(spark: SparkSession, dir: String, name: String): DataFrame =
       if (cacheInputs)
-        cached.getOrElseUpdate((dir, name),
-          load(spark, dir, name)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        SessionMemo(spark, "table", (dir, name))(load(spark, dir, name)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       else load(spark, dir, name)
 
     private def load(spark: SparkSession, dir: String, name: String): DataFrame = {

@@ -28,6 +28,10 @@ object Serving {
       cacheValid: Boolean, ttlSeconds: Long, ttlMinutes: Long,
       dataCount: Long, cacheTimestamp: java.sql.Timestamp, dataVersion: String)
 
+  /** One refresh's materialized frame, stamp and version. */
+  private[weather] final case class Snapshot(
+      frame: Option[DataFrame], stampMs: Long, version: String)
+
   final case class MonthlyResult(
       data: DataFrame, source: String, syncStatus: String,
       ttlSeconds: Long, count: Long) {
@@ -60,34 +64,42 @@ final class ServingCache(
 
   import Serving._
 
-  @volatile private var cached: Option[DataFrame] = None
-  @volatile private var cacheTimestampMs: Long = 0L
-  @volatile private var dataVersion: String = "v0"
+  /** What the last refresh published, in ONE reference: a reader sees a
+    * frame with the stamp and version of the refresh that built it,
+    * never a mix of two. */
+  @volatile private var snapshot = Snapshot(None, 0L, "v0")
 
   /** C1-C4: scan + (city, month) sort + persist + version stamp.
     * The reference scans all cities then filters client-side
     * (`clickhouseToRedis.js:55`); here the city filter in `monthly()` is
-    * pushed below this sort by Catalyst — same results, one scan less. */
+    * pushed below this sort by Catalyst — same results, one scan less.
+    * The new frame is materialized before it is published, and the old
+    * one is released only after, so readers never hit a released frame.
+    * The exception is a source that re-plans to the old frame's plan (an
+    * overwrite in place): the CacheManager keeps one entry per plan, so
+    * the old entry must go first or the persist below would adopt its
+    * rows. */
   def refreshNow(): Unit = synchronized {
-    cached.foreach(_.unpersist())
     val now = clock()
-    val df = monthlyAggSource()
-      .orderBy("city", "month")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val old = snapshot.frame
+    val df = monthlyAggSource().orderBy("city", "month")
+    val samePlan = old.exists(_.queryExecution.analyzed.sameResult(df.queryExecution.analyzed))
+    if (samePlan) old.foreach(_.unpersist())
+    df.persist(StorageLevel.MEMORY_AND_DISK)
     df.count() // materialize eagerly, like the reference's sync job
-    cached = Some(df)
-    cacheTimestampMs = now
-    dataVersion = s"v$now"
+    snapshot = Snapshot(Some(df), now, s"v$now")
+    if (!samePlan) old.foreach(_.unpersist())
   }
 
-  private def ttlRemaining(): Long =
-    math.max(0L, ttlSec - (clock() - cacheTimestampMs) / 1000L)
+  private def ttlRemaining(s: Snapshot): Long =
+    math.max(0L, ttlSec - (clock() - s.stampMs) / 1000L)
 
   /** S1-S5: cache-first monthly read for one city; falls through to the
     * warehouse when the cache is absent/expired (`monthly.js:16-105`). */
   def monthly(city: String): MonthlyResult = {
-    val ttl = ttlRemaining()
-    val (frame, source) = cached match {
+    val s = snapshot
+    val ttl = ttlRemaining(s)
+    val (frame, source) = s.frame match {
       case Some(df) if ttl > 0 => (df, "cache")
       case _ => (monthlyAggSource(), "warehouse")
     }
@@ -109,14 +121,15 @@ final class ServingCache(
 
   /** C6 — cache introspection (`cache.js:9-64`). */
   def status: CacheStatus = {
-    val ttl = ttlRemaining()
+    val s = snapshot
+    val ttl = ttlRemaining(s)
     CacheStatus(
-      cacheValid = cached.isDefined && ttl > 0,
+      cacheValid = s.frame.isDefined && ttl > 0,
       ttlSeconds = ttl,
       ttlMinutes = ttl / 60,
-      dataCount = cached.map(_.count()).getOrElse(0L),
-      cacheTimestamp = new java.sql.Timestamp(cacheTimestampMs),
-      dataVersion = dataVersion)
+      dataCount = s.frame.map(_.count()).getOrElse(0L),
+      cacheTimestamp = new java.sql.Timestamp(s.stampMs),
+      dataVersion = s.version)
   }
 }
 

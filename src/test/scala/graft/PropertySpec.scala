@@ -94,9 +94,12 @@ class PropertySpec extends SparkSpec {
   test("every oracled registry query is bit-stable across two runs (hash-gate guard)") {
     // the driver's correctness gate hashes values; any run-to-run
     // nondeterminism (AQE re-plans, partial-agg merge order) would flake
-    // it even with correct logic. Cheap full sweep at sf0.001.
+    // it even with correct logic. Cheap full sweep at sf0.001. The
+    // session memos are released between the runs, so run B re-derives
+    // every memoized input instead of reading run A's copy.
     Registry.all.filter(_.oracle.isDefined).foreach { q =>
       val a = q.build(spark, Sf0001).collect()
+      graft.ops.SessionMemo.releaseAll()
       val b = q.build(spark, Sf0001).collect()
       assert(a.length == b.length, q.name)
       a.zip(b).foreach { case (x, y) => assert(x == y, s"${q.name}: $x != $y") }

@@ -10,6 +10,9 @@ trait SparkSpec extends AnyFunSuite {
 
   val Sf0001 = "/root/testdata/sf0.001"
 
+  /** Ids of the RDDs currently persisted in the shared context. */
+  def persistentRddIds(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
   def tempDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 }

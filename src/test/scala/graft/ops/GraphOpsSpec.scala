@@ -337,8 +337,8 @@ class GraphOpsSpec extends SparkSpec {
     // readout — all 9 frontier/visited layers must be explicitly
     // unpersisted, or sweep JVMs bleed headroom call over call (delta,
     // not absolute: other tests' checkpoints are theirs). The shared
-    // session edge cache (r16) is pre-warmed OUTSIDE the bracket — it is
-    // the one registered, releasable exception to per-call release.
+    // session edge memo is pre-warmed OUTSIDE the bracket — it outlives
+    // the call by design and is freed by SessionMemo.releaseAll.
     GraphOps.sharedEdges(spark, Sf0001).count()
     val cachedBefore = spark.sparkContext.getPersistentRDDs.size
     val real = GraphOps.khopReach(spark, Sf0001).collect()

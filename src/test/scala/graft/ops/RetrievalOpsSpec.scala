@@ -411,6 +411,8 @@ class RetrievalOpsSpec extends SparkSpec {
   }
 
   test("sharedRun: cached run tables row-identical to the live pipelines; rebuild after release") {
+    SessionMemo.releaseAll()
+    val before = persistentRddIds()
     for (which <- Seq("bm25", "rrf", "prf")) {
       val live = (which match {
         case "bm25" => RetrievalOps.bm25(spark, Sf0001)
@@ -421,17 +423,27 @@ class RetrievalOpsSpec extends SparkSpec {
       assert(RetrievalOps.sharedRun(spark, Sf0001, which).collect().toSeq == live,
         s"cached $which run diverged from the live pipeline")
     }
-    // release path: the next consumer rebuilds from the live pipeline
-    RetrievalOps.releaseRunsCache()
+    // release path: the checkpointed runs leave executor storage and the
+    // next consumer rebuilds from the live pipeline
+    val built = persistentRddIds() -- before
+    assert(built.nonEmpty, "the run memo must hold checkpointed RDDs")
+    SessionMemo.releaseAll()
+    assert(persistentRddIds().intersect(built).isEmpty,
+      "releaseAll must free the checkpointed run RDDs")
     assert(RetrievalOps.sharedRun(spark, Sf0001, "bm25").collect().toSeq ==
       RetrievalOps.bm25(spark, Sf0001).collect().toSeq)
   }
 
   test("eval consumers: identical rows across a run/qrels cache release") {
+    SessionMemo.releaseAll()
+    val before = persistentRddIds()
     val summary = EvalOps.bm25EvalSummary(spark, Sf0001).collect().toSeq
     val perQ = EvalOps.bm25NdcgPerQuery(spark, Sf0001).collect().toSeq
-    EvalOps.releaseQrelsCache()
-    RetrievalOps.releaseRunsCache()
+    val built = persistentRddIds() -- before
+    assert(built.nonEmpty, "the run and qrels memos must hold checkpointed RDDs")
+    SessionMemo.releaseAll()
+    assert(persistentRddIds().intersect(built).isEmpty,
+      "releaseAll must free the checkpointed run and qrels RDDs")
     assert(EvalOps.bm25EvalSummary(spark, Sf0001).collect().toSeq == summary)
     assert(EvalOps.bm25NdcgPerQuery(spark, Sf0001).collect().toSeq == perQ)
   }

@@ -122,6 +122,59 @@ class WeatherPipelineSpec extends SparkSpec {
     assert(cache.monthly("Nowhere").count == 0)
   }
 
+  test("refresh while serving: every cache read carries the rows of the refresh its ttl names") {
+    // refresh k publishes a monthly_agg stamped with its own load time at
+    // logical time k·StepMs; a reader at tick T that is served from the
+    // cache with ttl t was served the refresh stamped T - (TtlSec - t)·1000
+    val TtlSec = 1000L
+    val StepMs = 10000L
+    val Refreshes = 12
+    val daily = Warehouse.toDailyWeather(enriched, loadTime).cache()
+    def loadTimeOf(k: Int) = new java.sql.Timestamp(loadTime.getTime + k * 60000L)
+    @volatile var version = 0
+    val tick = ThreadLocal.withInitial[java.lang.Long](() => 0L)
+    val cache = new ServingCache(spark, () => Warehouse.monthlyAgg(daily, loadTimeOf(version)),
+      ttlSec = TtlSec, clock = () => tick.get)
+    cache.refreshNow()
+    @volatile var done = false
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val reads = new java.util.concurrent.atomic.AtomicInteger()
+    val readers = (1 to 3).map { i =>
+      val t = new Thread(() => {
+        val now = (Refreshes + i) * StepMs
+        tick.set(now)
+        while (!done) {
+          val r = cache.monthly("Stockton")
+          val rows = r.data.collect()
+          reads.incrementAndGet()
+          if (r.source != "cache") failures.add(s"${r.source} read at tick $now")
+          else {
+            val stamp = now - (TtlSec - r.ttlSeconds) * 1000L
+            val want = loadTimeOf((stamp / StepMs).toInt)
+            val got = rows.map(_.getAs[java.sql.Timestamp]("warehouse_load_time")).toSet
+            if (rows.length != 2 || r.count != 2 || got != Set(want))
+              failures.add(s"ttl ${r.ttlSeconds} names refresh at $stamp (rows of $want), served $got")
+          }
+        }
+      })
+      t.start(); t
+    }
+    try {
+      for (k <- 1 to Refreshes) {
+        version = k
+        tick.set(k * StepMs)
+        cache.refreshNow()
+      }
+    } finally {
+      done = true
+      readers.foreach(_.join())
+      daily.unpersist()
+    }
+    assert(reads.get > 0)
+    assert(failures.isEmpty, failures.toArray.take(5).mkString("; "))
+    assert(cache.status.dataVersion == s"v${Refreshes * StepMs}")
+  }
+
   test("incremental load: high-watermark bounds each run to new batches") {
     val t1 = java.sql.Timestamp.valueOf("2026-01-02 00:00:00")
     val batch2 = OpenMeteoIngest.enrich(
