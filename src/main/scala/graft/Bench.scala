@@ -1,5 +1,7 @@
 package graft
 
+import graft.tools.QueryProbe
+
 /** Benchmark entry point (driver-run per round → BENCH_r{N}.json).
   * Times each headline query end-to-end (plan + execute + reduce) on
   * SPARK_GRAFT_SF_DIR, after one untimed warmup of the smallest query to
@@ -10,7 +12,7 @@ package graft
   * queries); min-of-N measures the code, not the machine's worst moment,
   * and stays comparable round-over-round. Prints ONE JSON line. */
 object Bench {
-  private val Reps = 3
+  private[graft] val Reps = 3
 
   /** A mid-run canary pair (serial + wide) fires before every
     * CanaryEvery-th headline — ~4-5 readings across a 35-headline
@@ -29,7 +31,7 @@ object Bench {
     * r10 decontaminate 17.5 s vs a judge-measured 1.02 s) that each
     * cost a round of attention; min-of-3 inside one busy window cannot
     * defeat SUSTAINED contention, but a canary exposes it. */
-  private def canarySec(): Double = {
+  private[graft] def canarySec(): Double = {
     val t0 = System.nanoTime()
     var x = 0x9E3779B97F4A7C15L
     var i = 0
@@ -83,39 +85,10 @@ object Bench {
     // ledger adjudicates whether the PLAN changed — a regression that
     // hides inside healthy wall-clock (or a phantom that inflates it)
     // shows in the records column, which box contention cannot move
-    val ledger = graft.tools.ShuffleLedger.attach(spark)
+    val probe = QueryProbe.attach(spark)
 
     val headline = Registry.all.filter(_.headline)
-    // Warmups are untimed but NEVER silent: a failed index/layout build
-    // pushes the one-time write into the first timed rep (min-of-3 mostly
-    // masks it; a persistent failure yields -1 with the root cause
-    // hidden), so the swallowed exception is logged like the per-rep path.
-    def warmup(what: String)(body: => Any): Unit =
-      try { body; () }
-      catch { case e: Throwable =>
-        // class + String.valueOf like Verify.dumpOne: getMessage alone is
-        // null for NPEs, which would hide exactly the root cause this
-        // log line exists to surface
-        System.err.println(s"[bench] warmup '$what' failed: " +
-          s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage)}")
-      }
-    // small full pipeline (codegen + classloading)
-    warmup("d4_count")(Registry.byName("d4_count").build(spark, sfDir).count())
-    // build the materialized kNN index untimed: x_sim_knn_indexed measures
-    // the probe-many regime (the write-once cost is the point of the shape)
-    warmup("knn_index")(graft.ops.SimilarityOps.ensureKnnIndex(spark, sfDir))
-    // ditto for the lexical index: x_retrieval_bm25_indexed measures the
-    // probe-many regime against the pre-built term-sorted statistics
-    warmup("lex_index")(graft.ops.RetrievalOps.ensureLexIndex(spark, sfDir))
-    // and the PQ index: x_sim_topk_pq_indexed measures ADC probing, not
-    // codebook training (paid once at build time)
-    warmup("pq_index")(graft.ops.PqOps.ensurePqIndex(spark, sfDir))
-    // and the binary-code index: x_sim_topk_hamming_indexed measures the
-    // 8-byte-per-vector probe scan, not the sign-packing pass
-    warmup("bin_index")(graft.ops.SimilarityOps.ensureBinaryIndex(spark, sfDir))
-    // and the co-bucketed join twins: j11_bucket_join measures the
-    // shuffle-free recurring join, not the one-time bucketed write
-    warmup("bucketed_tables")(graft.ops.JoinOps.ensureBucketedTables(spark, sfDir))
+    warmUp(spark, sfDir)
 
     canarySec() // JIT warm — untimed, like the query warmups
     wideCanarySec(spark) // scheduler/JIT warm for the parallel probe
@@ -140,26 +113,13 @@ object Bench {
       // -1 (unmistakably a failure marker) and is excluded from total.
       val samples = (1 to Reps).flatMap { _ =>
         // per-rep fixture setup (e.g. re-fragment the compaction lake)
-        // runs OUTSIDE the timer: the recorded number is the operator's
-        // cost, not its fixture's write cost. Failures are logged like
-        // any warmup; the timed body then rebuilds for itself (slower,
-        // visibly — never silently wrong).
-        q.benchPrep.foreach(p => warmup(s"${q.name} prep")(p(spark, sfDir)))
-        // the ledger window opens AFTER prep (same boundary the timer
-        // draws) and only after a drain, so the previous rep's / the
-        // canaries' queued TaskEnd events can't leak in
-        ledger.drain(); ledger.reset()
-        val off = sinceStart()
-        val t0 = System.nanoTime()
-        // execute the *physical* plan as planned (df.count() would let the
-        // optimizer drop sorts/projections above the agg and under-measure)
+        // runs OUTSIDE the timer and the work window: the recorded
+        // number is the operator's cost, not its fixture's write cost
         try {
-          q.build(spark, sfDir).queryExecution.toRdd.count()
-          val sec = (System.nanoTime() - t0) / 1e9
-          ledger.drain()
-          Some((off, sec, ledger.records, ledger.bytes))
+          val r = probe.run(q, sfDir)
+          Some(((r.startNs - suiteT0) / 1e9, r))
         } catch { case e: Throwable =>
-          System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
+          System.err.println(s"[bench] ${q.name} failed: ${QueryProbe.describe(e)}")
           None
         }
       }
@@ -169,7 +129,7 @@ object Bench {
     val wideEnd = wideCanarySec(spark)
     val loadEnd = loadAvg()
     val mins = results.map { case (k, ss) =>
-      k -> (if (ss.nonEmpty) ss.map(_._2).min else -1.0)
+      k -> (if (ss.nonEmpty) ss.map(_._2.sec).min else -1.0)
     }
     val qs = mins.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -178,19 +138,19 @@ object Bench {
     // event a rep absorbed). -1 marks a fully-failed headline, like sec.
     val recJson = results
       .map { case (k, ss) =>
-        "\"" + k + "\":" + (if (ss.nonEmpty) ss.map(_._3).min else -1L)
+        "\"" + k + "\":" + (if (ss.nonEmpty) ss.map(_._2.shuffleRecords).min else -1L)
       }
       .mkString("{", ",", "}")
     val bytJson = results
       .map { case (k, ss) =>
-        "\"" + k + "\":" + (if (ss.nonEmpty) ss.map(_._4).min else -1L)
+        "\"" + k + "\":" + (if (ss.nonEmpty) ss.map(_._2.shuffleBytes).min else -1L)
       }
       .mkString("{", ",", "}")
     // raw per-rep samples ride along so a reader can tell a code
     // regression (all reps slow, canary normal) from box contention
     // (spread-out reps and/or an elevated canary) without re-running
     val samplesJson = results
-      .map { case (k, ss) => "\"" + k + "\":[" + ss.map(_._2).mkString(",") + "]" }
+      .map { case (k, ss) => "\"" + k + "\":[" + ss.map(_._2.sec).mkString(",") + "]" }
       .mkString("{", ",", "}")
     // per-rep wall-clock start offsets (seconds since suite start),
     // index-aligned with samples; with the mid canaries these bound
@@ -205,10 +165,11 @@ object Bench {
       .mkString("[", ",", "]")
     // per memo key across warmups and reps: the first consumer's build
     // seconds and how many later reads it served
-    val memoJson = graft.ops.SessionMemo.stats.toSeq.sortBy(_._1)
-      .map { case (k, st) =>
-        s""""$k":{"builds":${st.builds},"hits":${st.hits},"build_s":${st.buildSeconds}}"""
-      }
+    val memoJson = QueryProbe.memoJson(graft.ops.SessionMemo.stats)
+    // the layer split of each headline's fastest rep; forensics only
+    // (the compact line below must survive log-tail truncation)
+    val probeJson = results
+      .collect { case (k, ss) if ss.nonEmpty => "\"" + k + "\":" + ss.minBy(_._2.sec)._2.json }
       .mkString("{", ",", "}")
     val total = mins.map(_._2).filter(_ >= 0).sum
     // failed count rides in the record: a broken headline drops out of
@@ -227,8 +188,33 @@ object Bench {
     // per-query shuffle records/bytes, ~4 KB) goes LAST so any
     // suffix-truncated capture retains it whole and it parses
     // standalone.
-    println(s"""{"forensics":{"samples":$samplesJson,"offsets":$offsetsJson},"sf":"$sfDir"}""")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"canary":{"start":$canaryStart,"end":$canaryEnd,"wide_start":$wideStart,"wide_end":$wideEnd,"load_start":"$loadStart","load_end":"$loadEnd","mid":$midJson},"queries":$qs,"shuffle_records":$recJson,"shuffle_bytes":$bytJson,"drain":"${if (ledger.drainFellBack) "fallback" else "clean"}","memo":$memoJson,"sf":"$sfDir"}""")
+    println(s"""{"forensics":{"samples":$samplesJson,"offsets":$offsetsJson},"probe":$probeJson,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"canary":{"start":$canaryStart,"end":$canaryEnd,"wide_start":$wideStart,"wide_end":$wideEnd,"load_start":"$loadStart","load_end":"$loadEnd","mid":$midJson},"queries":$qs,"shuffle_records":$recJson,"shuffle_bytes":$bytJson,"drain":"${if (probe.drainFellBack) "fallback" else "clean"}","memo":$memoJson,"sf":"$sfDir"}""")
     spark.stop()
+  }
+
+  /** The untimed warm-ups Bench and the [[QueryProbe]] CLI run before
+    * timing anything. They are untimed but NEVER silent: a failed
+    * index/layout build pushes the one-time write into the first timed
+    * rep (min-of-3 mostly masks it; a persistent failure yields -1 with
+    * the root cause hidden), so each failure is logged. */
+  private[graft] def warmUp(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
+    // small full pipeline (codegen + classloading)
+    QueryProbe.attempt("d4_count")(Registry.byName("d4_count").build(spark, dir).count())
+    // build the materialized kNN index untimed: x_sim_knn_indexed measures
+    // the probe-many regime (the write-once cost is the point of the shape)
+    QueryProbe.attempt("knn_index")(graft.ops.SimilarityOps.ensureKnnIndex(spark, dir))
+    // ditto for the lexical index: x_retrieval_bm25_indexed measures the
+    // probe-many regime against the pre-built term-sorted statistics
+    QueryProbe.attempt("lex_index")(graft.ops.RetrievalOps.ensureLexIndex(spark, dir))
+    // and the PQ index: x_sim_topk_pq_indexed measures ADC probing, not
+    // codebook training (paid once at build time)
+    QueryProbe.attempt("pq_index")(graft.ops.PqOps.ensurePqIndex(spark, dir))
+    // and the binary-code index: x_sim_topk_hamming_indexed measures the
+    // 8-byte-per-vector probe scan, not the sign-packing pass
+    QueryProbe.attempt("bin_index")(graft.ops.SimilarityOps.ensureBinaryIndex(spark, dir))
+    // and the co-bucketed join twins: j11_bucket_join measures the
+    // shuffle-free recurring join, not the one-time bucketed write
+    QueryProbe.attempt("bucketed_tables")(graft.ops.JoinOps.ensureBucketedTables(spark, dir))
   }
 }

@@ -38,6 +38,7 @@ object SessionMemo {
 
   final case class Stats(builds: Long, hits: Long, buildSeconds: Double) {
     def +(o: Stats): Stats = Stats(builds + o.builds, hits + o.hits, buildSeconds + o.buildSeconds)
+    def -(o: Stats): Stats = Stats(builds - o.builds, hits - o.hits, buildSeconds - o.buildSeconds)
   }
 
   /** One entry; its first build runs under the cell's own lock. */

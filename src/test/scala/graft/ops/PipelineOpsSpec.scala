@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
 
 /** Semantics tests for the LLM-pipeline extensions: planted fixtures with
   * known duplicates/neighbors, determinism across partitionings, and
@@ -518,20 +517,12 @@ class PipelineOpsSpec extends SparkSpec {
     assert(got == want)
   }
 
-  test("observed-metrics listener reports the df-cap drop counter") {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
-    val listener = new graft.tools.ObservedMetricsListener((n, kv) => seen.add((n, kv)))
-    spark.listenerManager.register(listener)
-    try {
-      DedupOps.ngramJaccard(spark, hotShingleDir, 8).collect()
-      // listener callbacks are async relative to the action
-      val deadline = System.nanoTime() + 10000000000L
-      while (!seen.asScala.exists(_._1 == "ngram_df_cap") && System.nanoTime() < deadline)
-        Thread.sleep(50)
-      val hit = seen.asScala.find(_._1 == "ngram_df_cap")
-      assert(hit.isDefined, seen.asScala.mkString(";"))
-      assert(hit.get._2.contains("dropped_hot_shingles=1"), hit.get._2)
-    } finally spark.listenerManager.unregister(listener)
+  test("query probe record reports the df-cap drop counter") {
+    val capped = graft.GraftQuery("ngram_jaccard_cap8", (s, d) => DedupOps.ngramJaccard(s, d, 8))
+    val observed = graft.tools.QueryProbe.attach(spark).run(capped, hotShingleDir).observed
+    val hit = observed.get("ngram_df_cap")
+    assert(hit.isDefined, observed.toString)
+    assert(hit.get.get("dropped_hot_shingles").contains(1L), hit.get.toString)
   }
 
   test("lsh + simhash bucket caps: cap 1 drops every bucket; defaults drop none") {

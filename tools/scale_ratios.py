@@ -20,9 +20,12 @@ there, job overhead amortization dominates the ratio.
 per entry (small/big seconds + ratio + flag) plus the run metadata, so
 the round-over-round scale story is a file, not a PLANS.md table a
 reader has to trust. Warm-up discipline lives in the PRODUCER
-(graft.tools.TimeEntries runs the index/layout builds and an input-cache
-warmer untimed before the sweep), so a cold one-time build can't
-masquerade as a super-linear operator here.
+(graft.tools.QueryProbe runs Bench's untimed warm-ups, including the
+index/layout builds, before the sweep and records a serial canary at its
+start and end), so a cold one-time build can't masquerade as a
+super-linear operator here. Produce each input with
+  sbt "runMain graft.tools.QueryProbe <sfDir> [reps] [name,...|all]"
+(its last line is the Bench-shaped total line this script reads).
 """
 import json
 import sys
@@ -32,10 +35,11 @@ MIN_SEC = 0.15
 TIER2_RATIO = 12.0
 TIER2_MIN_SEC = 0.5
 
-# Entries whose super-linear WALL is adjudicated by a ShuffleStats
-# ledger read (PLANS.md carries the full argument): the flag still
-# fires -- discipline first -- but the artifact carries the verdict so
-# a reader can tell "open regression" from "pinned by design".
+# Entries whose super-linear WALL is adjudicated by a shuffle-ledger
+# read (the probe record's shuffle_records; PLANS.md carries the full
+# argument): the flag still fires -- discipline first -- but the
+# artifact carries the verdict so a reader can tell "open regression"
+# from "pinned by design".
 _KNN_ANCHOR = (
     "exact-kNN O(n^2) oracle anchor (require-gated, <=1M rows; "
     "production path is the bucketed knnJoin): shuffle records grow "
