@@ -1,46 +1,80 @@
 package graft.weather
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.util.concurrent.atomic.LongAdder
+
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.types.StructType
 
 /** Serving stage — SURVEY.md §2 C1-C7, S1-S7, D1-D5
   * (`clickhouseToRedis.js`, `backend/routes/monthly.js`,
   * `backend/routes/cache.js`, `backend/routes/diagnostics.js`).
   *
-  * The Redis TTL cache becomes a persisted DataFrame + freshness
-  * metadata: a hit is an InMemoryTableScan, a miss re-plans against the
-  * warehouse, and staleness is a pure function of stored timestamps —
-  * one code path instead of the reference's two.
+  * The Redis TTL cache becomes an immutable per-city snapshot of the
+  * served rows, each pre-rendered as JSON at refresh like the
+  * reference's payload: a hit is a map lookup plus TTL arithmetic and
+  * starts no Spark job, a miss runs one Spark query against the
+  * warehouse, and both render rows through the same projection.
   */
 object Serving {
 
-  /** S4 — staleness classification (`monthly.js:35-42`): remaining TTL
-    * under 20% of the refresh interval → out-of-sync, under 60% →
-    * partial, else full. Exposed as a column so it can run distributed
-    * or per-payload. */
-  def syncStatus(ttlSeconds: Column, refreshIntervalSec: Column): Column =
-    when(ttlSeconds < refreshIntervalSec * 0.2, "out-of-sync")
-      .when(ttlSeconds < refreshIntervalSec * 0.6, "partial")
-      .otherwise("full")
-
   final case class CacheStatus(
       cacheValid: Boolean, ttlSeconds: Long, ttlMinutes: Long,
-      dataCount: Long, cacheTimestamp: java.sql.Timestamp, dataVersion: String)
+      dataCount: Long, cacheTimestamp: java.sql.Timestamp, dataVersion: String,
+      hits: Long, misses: Long, stale: Long)
 
-  /** One refresh's materialized frame, stamp and version. */
+  /** Served rows in month order, with each row's JSON. */
+  private[weather] type Rendered = (Array[Row], Array[String])
+
+  /** One refresh's rows per city, their schema, stamp and version. */
   private[weather] final case class Snapshot(
-      frame: Option[DataFrame], stampMs: Long, version: String)
+      byCity: Map[String, Rendered], schema: StructType, stampMs: Long, version: String)
 
-  final case class MonthlyResult(
-      data: DataFrame, source: String, syncStatus: String,
-      ttlSeconds: Long, count: Long) {
+  /** S3 — the served columns (`monthly.js:20-31`): the aggregates as
+    * doubles, so the JSON numbers are the reference's. */
+  private val Served = Seq(
+    col("month"),
+    col("avg_temp_c").cast("double").as("avg_temp_c"),
+    col("total_rain_mm").cast("double").as("total_rain_mm"),
+    col("city"), col("warehouse_load_time"))
+
+  /** One Spark query (one job over a stored source): `source`'s rows in
+    * the served columns, each with its `to_json` rendering. Returns the
+    * served schema and the rows in month order (nulls first, as `orderBy`
+    * sorts); the sort runs here, on at most |cities|×|months| rows, so
+    * the query needs no exchange. Rows are positional: month is field 0
+    * and city field 3 of [[Served]]. */
+  private[weather] def render(source: DataFrame): (StructType, Seq[(Row, String)]) = {
+    val served = source.select(Served: _*)
+    val rows = served.select(col("*"), to_json(struct(served.columns.map(col): _*))).collect()
+    val rendered = rows.toSeq.map(r => (Row.fromSeq(r.toSeq.init), r.getString(r.length - 1)))
+    (served.schema, rendered.sortBy(r => Option(r._1.getTimestamp(0)).map(_.getTime)))
+  }
+
+  /** Rendered rows as the parallel arrays a snapshot holds. */
+  private[weather] def split(rows: Seq[(Row, String)]): Rendered = {
+    val (data, json) = rows.unzip
+    (data.toArray, json.toArray)
+  }
+
+  /** One `GET /api/monthly` answer. `data` is a local relation over the
+    * served rows, built on first use: a read that only renders the
+    * envelope does no Catalyst work. */
+  final class MonthlyResult private[weather] (
+      spark: SparkSession, schema: StructType, rendered: Rendered,
+      val source: String, val syncStatus: String, val ttlSeconds: Long) {
+
+    lazy val data: DataFrame = spark.createDataFrame(java.util.Arrays.asList(rendered._1: _*), schema)
+
+    val count: Long = rendered._1.length.toLong
 
     /** The `GET /api/monthly` response envelope
       * (`backend/routes/monthly.js:44-52,98-105`): data rows + source /
       * cache_status / sync_status / ttl_seconds / count. */
     def toJsonEnvelope: String = {
-      val rows = data.toJSON.collect().mkString("[", ",", "]")
+      val rows = rendered._2.mkString("[", ",", "]")
       val cacheStatus = if (source == "cache") "active" else "miss"
       s"""{"data":$rows,"source":"$source","cache_status":"$cacheStatus",""" +
         s""""sync_status":"$syncStatus","ttl_seconds":$ttlSeconds,"count":$count}"""
@@ -48,10 +82,11 @@ object Serving {
   }
 }
 
-/** The cache-or-warehouse read path. `refresh()` = the reference's
-  * `clickhouseToRedis.js` materialization (C1-C5); `monthly(city)` = the
+/** The cache-or-warehouse read path. `refreshNow()` = the reference's
+  * `clickhouseToRedis.js` materialization (C1-C5) and its
+  * `POST /sync-now` trigger (C7); `monthly(city)` = the
   * `GET /api/monthly` route (S1-S5); `status` = `cache.js` introspection
-  * (C6); `refreshNow()` = the `POST /sync-now` trigger (C7).
+  * (C6).
   *
   * @param ttlSec cache TTL (the reference's REDIS_TTL_SEC, default 3600)
   * @param clock  injectable for deterministic staleness tests
@@ -64,72 +99,66 @@ final class ServingCache(
 
   import Serving._
 
-  /** What the last refresh published, in ONE reference: a reader sees a
-    * frame with the stamp and version of the refresh that built it,
+  /** What the last refresh published, in ONE reference: a reader sees
+    * rows with the stamp and version of the refresh that built them,
     * never a mix of two. */
-  @volatile private var snapshot = Snapshot(None, 0L, "v0")
+  @volatile private var snapshot: Option[Snapshot] = None
 
-  /** C1-C4: scan + (city, month) sort + persist + version stamp.
-    * The reference scans all cities then filters client-side
-    * (`clickhouseToRedis.js:55`); here the city filter in `monthly()` is
-    * pushed below this sort by Catalyst — same results, one scan less.
-    * The new frame is materialized before it is published, and the old
-    * one is released only after, so readers never hit a released frame.
-    * The exception is a source that re-plans to the old frame's plan (an
-    * overwrite in place): the CacheManager keeps one entry per plan, so
-    * the old entry must go first or the persist below would adopt its
-    * rows. */
+  private val hits, misses, stale = new LongAdder
+
+  /** C1-C4: one scan of the source, rendered per city and stamped. The
+    * reference scans all cities and splits them client-side
+    * (`clickhouseToRedis.js:55`); so does this. */
   def refreshNow(): Unit = synchronized {
     val now = clock()
-    val old = snapshot.frame
-    val df = monthlyAggSource().orderBy("city", "month")
-    val samePlan = old.exists(_.queryExecution.analyzed.sameResult(df.queryExecution.analyzed))
-    if (samePlan) old.foreach(_.unpersist())
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    df.count() // materialize eagerly, like the reference's sync job
-    snapshot = Snapshot(Some(df), now, s"v$now")
-    if (!samePlan) old.foreach(_.unpersist())
+    val (schema, rendered) = render(monthlyAggSource())
+    val byCity = rendered.groupBy(_._1.getString(3)).map { case (city, rs) => city -> split(rs) }
+    snapshot = Some(Snapshot(byCity, schema, now, s"v$now"))
   }
 
-  private def ttlRemaining(s: Snapshot): Long =
-    math.max(0L, ttlSec - (clock() - s.stampMs) / 1000L)
+  private def ttlRemaining(s: Option[Snapshot]): Long =
+    math.max(0L, ttlSec - (clock() - s.fold(0L)(_.stampMs)) / 1000L)
+
+  /** S4 — staleness (`monthly.js:35-42`): a warehouse read is always
+    * out-of-sync (`monthly.js:103`); a cache read is out-of-sync under
+    * 20% of the TTL left, partial under 60%, else full. */
+  private def syncStatusOf(source: String, ttl: Long): String =
+    if (source == "warehouse" || ttl < ttlSec * 0.2) "out-of-sync"
+    else if (ttl < ttlSec * 0.6) "partial"
+    else "full"
 
   /** S1-S5: cache-first monthly read for one city; falls through to the
     * warehouse when the cache is absent/expired (`monthly.js:16-105`). */
   def monthly(city: String): MonthlyResult = {
     val s = snapshot
     val ttl = ttlRemaining(s)
-    val (frame, source) = s.frame match {
-      case Some(df) if ttl > 0 => (df, "cache")
-      case _ => (monthlyAggSource(), "warehouse")
+    val (schema, rendered, source) = s match {
+      case Some(snap) if ttl > 0 =>
+        hits.increment()
+        (snap.schema, snap.byCity.getOrElse(city, (Array.empty[Row], Array.empty[String])), "cache")
+      case _ =>
+        misses.increment()
+        val (schema, rs) = render(monthlyAggSource().filter(col("city") === city))
+        (schema, split(rs), "warehouse")
     }
-    val data = frame
-      .filter(col("city") === city)
-      .select(
-        col("month"),
-        col("avg_temp_c").cast("double").as("avg_temp_c"),
-        col("total_rain_mm").cast("double").as("total_rain_mm"),
-        col("city"), col("warehouse_load_time"))
-      .orderBy("month")
-    val status =
-      if (source == "warehouse") "out-of-sync" // reference: CH fallback is always out-of-sync
-      else if (ttl < ttlSec * 0.2) "out-of-sync"
-      else if (ttl < ttlSec * 0.6) "partial"
-      else "full"
-    MonthlyResult(data, source, status, ttl, data.count())
+    val status = syncStatusOf(source, ttl)
+    if (source == "cache" && status != "full") stale.increment()
+    new MonthlyResult(spark, schema, rendered, source, status, ttl)
   }
 
-  /** C6 — cache introspection (`cache.js:9-64`). */
+  /** C6 — cache introspection (`cache.js:9-64`) plus the hit, miss and
+    * stale-hit counters. */
   def status: CacheStatus = {
     val s = snapshot
     val ttl = ttlRemaining(s)
     CacheStatus(
-      cacheValid = s.frame.isDefined && ttl > 0,
+      cacheValid = s.isDefined && ttl > 0,
       ttlSeconds = ttl,
       ttlMinutes = ttl / 60,
-      dataCount = s.frame.map(_.count()).getOrElse(0L),
-      cacheTimestamp = new java.sql.Timestamp(s.stampMs),
-      dataVersion = s.version)
+      dataCount = s.fold(0L)(_.byCity.valuesIterator.map(_._1.length.toLong).sum),
+      cacheTimestamp = new java.sql.Timestamp(s.fold(0L)(_.stampMs)),
+      dataVersion = s.fold("v0")(_.version),
+      hits = hits.sum, misses = misses.sum, stale = stale.sum)
   }
 }
 
@@ -144,9 +173,10 @@ object Diagnostics {
       table: String = "monthly_agg", city: String = Model.City): Seq[Check] = {
     val checks = scala.collection.mutable.ArrayBuffer.empty[Check]
 
-    val live = try { spark.sql("SELECT 1").collect().head.getInt(0) == 1 }
-    catch { case _: Throwable => false }
-    checks += Check("connection", live, "SELECT 1")
+    val (live, detail) =
+      try (spark.sql("SELECT 1").collect().head.getInt(0) == 1, "SELECT 1")
+      catch { case NonFatal(e) => (false, s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage)}") }
+    checks += Check("connection", live, detail)
     if (!live) return checks.toSeq
 
     val dbOk = spark.catalog.databaseExists(db)

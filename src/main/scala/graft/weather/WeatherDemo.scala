@@ -28,6 +28,8 @@ object WeatherDemo {
     res.data.show(truncate = false)
     println("fetch URL: " + OpenMeteoIngest.buildUrl(startDate = "2025-12-01", endDate = "2025-12-02"))
     println("unknown-city count: " + cache.monthly("Fresno").count)
+    val st = cache.status
+    println(s"=== cache ${st.dataVersion} rows=${st.dataCount} hits=${st.hits} misses=${st.misses} stale=${st.stale} ===")
     spark.stop()
   }
 }

@@ -132,9 +132,9 @@ object WeatherFidelity {
       loadTime)
 
   /** One ServingCache read at a controlled clock: refresh at t0, serve
-    * at t0 + ageSec — C1/C2 (sort + pushed city filter), C3/C4 (persist
-    * + version/TTL), S1 (cache-vs-warehouse source), S3 (double casts),
-    * S4 (staleness CASE) all pinned by value. The clock is a closure
+    * at t0 + ageSec — C1/C2 (per-city split in month order), C3/C4
+    * (snapshot + version/TTL), S1 (cache-vs-warehouse source), S3
+    * (double casts), S4 (staleness) all pinned by value. The clock is a closure
     * over a mutable cell, so the TTL arithmetic is deterministic. */
   private def servedAt(spark: SparkSession, dir: String,
       ageSec: Long, city: String): DataFrame = {

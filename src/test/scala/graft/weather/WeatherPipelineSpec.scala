@@ -206,6 +206,110 @@ class WeatherPipelineSpec extends SparkSpec {
         "\"avg_temp_c\"").foreach(k => assert(env.contains(k), s"missing $k in $env"))
   }
 
+  /** A stored monthly_agg, read once: Stockton's months out of order and
+    * one month with no temperature (null avg_temp_c), plus a second city. */
+  private lazy val storedAgg = {
+    def ts(iso: String) = java.sql.Timestamp.from(java.time.Instant.parse(iso))
+    val load = ts("2026-01-02T00:00:00Z")
+    val rows = Seq(
+      Row("Stockton", ts("2026-01-01T00:00:00Z"), null, 0.5f, load, 1),
+      Row("Lodi", ts("2025-12-01T00:00:00Z"), 6.0f, 0.0f, load, 3),
+      Row("Stockton", ts("2025-12-01T00:00:00Z"), 7.5f, 1.25f, load, 4))
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "city STRING, month TIMESTAMP, avg_temp_c FLOAT, total_rain_mm FLOAT, " +
+        "warehouse_load_time TIMESTAMP, rows_loaded INT")
+    val dir = tempDir("served_agg")
+    Warehouse.writeMonthlyAgg(spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema), dir)
+    spark.read.parquet(dir)
+  }
+
+  /** Spark jobs started while `body` runs, with the listener bus drained
+    * before and after so no other window's events are counted. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    def drain(): Unit = {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    drain()
+    sc.addSparkListener(listener)
+    try { body; drain(); jobs.get }
+    finally sc.removeSparkListener(listener)
+  }
+
+  test("a refresh and a warehouse miss start one Spark job; a hit and status start none") {
+    val stored = storedAgg // written and read before any window opens
+    var nowMs = 0L
+    val cache = new ServingCache(spark, () => stored, ttlSec = 1000L, clock = () => nowMs)
+    assert(jobsDuring(cache.refreshNow()) == 1)
+    assert(jobsDuring {
+      val hit = cache.monthly("Stockton")
+      assert(hit.source == "cache" && hit.count == 2)
+      hit.toJsonEnvelope
+      assert(cache.status.dataCount == 3)
+    } == 0)
+    nowMs = 1001 * 1000L
+    assert(jobsDuring {
+      val miss = cache.monthly("Stockton")
+      assert(miss.source == "warehouse" && miss.count == 2)
+      miss.toJsonEnvelope
+    } == 1)
+  }
+
+  test("an unknown city served from a valid cache is empty and starts no Spark job") {
+    val cache = new ServingCache(spark, () => storedAgg, ttlSec = 1000L, clock = () => 0L)
+    cache.refreshNow()
+    assert(jobsDuring {
+      val r = cache.monthly("Nowhere")
+      assert(r.source == "cache" && r.count == 0)
+      assert(r.toJsonEnvelope.startsWith("""{"data":[],"source":"cache""""))
+    } == 0)
+  }
+
+  test("hit and miss render the same rows byte for byte, nulls omitted, in month order") {
+    var nowMs = 0L
+    val cache = new ServingCache(spark, () => storedAgg, ttlSec = 1000L, clock = () => nowMs)
+    cache.refreshNow()
+    val hit = cache.monthly("Stockton")
+    nowMs = 1001 * 1000L
+    val miss = cache.monthly("Stockton")
+    val rows =
+      """[{"month":"2025-12-01T00:00:00.000Z","avg_temp_c":7.5,"total_rain_mm":1.25,"city":"Stockton",""" +
+        """"warehouse_load_time":"2026-01-02T00:00:00.000Z"},""" +
+        """{"month":"2026-01-01T00:00:00.000Z","total_rain_mm":0.5,"city":"Stockton",""" +
+        """"warehouse_load_time":"2026-01-02T00:00:00.000Z"}]"""
+    assert(hit.toJsonEnvelope == s"""{"data":$rows,"source":"cache","cache_status":"active",""" +
+      """"sync_status":"full","ttl_seconds":1000,"count":2}""")
+    assert(miss.toJsonEnvelope == s"""{"data":$rows,"source":"warehouse","cache_status":"miss",""" +
+      """"sync_status":"out-of-sync","ttl_seconds":0,"count":2}""")
+    // the lazy data frames hold the rows the envelopes render
+    Seq(hit, miss).foreach(r => assert(r.data.toJSON.collect().mkString("[", ",", "]") == rows))
+  }
+
+  test("serving counters: hits, misses and stale hits over the S1-S5 boundary sequence") {
+    val agg = Warehouse.monthlyAgg(Warehouse.toDailyWeather(enriched, loadTime), loadTime)
+    var nowMs = 0L
+    val cache = new ServingCache(spark, () => agg, ttlSec = 1000L, clock = () => nowMs)
+    cache.monthly("Stockton") // miss: no refresh yet
+    cache.refreshNow()
+    for (elapsed <- Seq(0L, 399L, 401L, 799L, 801L, 999L)) { // full x2, partial x2, out-of-sync x2
+      nowMs = elapsed * 1000L
+      cache.monthly("Stockton")
+    }
+    nowMs = 1001 * 1000L
+    cache.monthly("Stockton") // miss: expired
+    nowMs = 100 * 1000L
+    val st = cache.status
+    cache.monthly("Nowhere") // full hit on an unknown city
+    val end = cache.status
+    assert((st.hits, st.misses, st.stale) == ((6L, 2L, 4L)))
+    assert((end.hits, end.misses, end.stale) == ((7L, 2L, 4L)))
+  }
+
   test("E7 layout: month partitioning prunes the fact scan") {
     val daily = Warehouse.toDailyWeather(enriched, loadTime)
     val dir = tempDir("daily_weather")
