@@ -33,10 +33,12 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
-    // optional 3rd arg: comma-separated name filter for local dry-runs
-    // (the driver always calls with exactly two args → full registry)
+    // optional 3rd arg: comma-separated name filter for local dry-runs;
+    // it filters the dumps and oracle_sql.json alike (two args → full
+    // registry)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
+    def wanted(name: String): Boolean = only.forall(_.contains(name))
     val spark = GraftSession.get("graft-verify")
     // one Verify pass evaluates the whole registry against the same input
     // tables — cache them once instead of re-scanning per entry (the
@@ -50,7 +52,7 @@ object Verify {
     // _errors.json sidecar gives the full story in one place.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => wanted(name) }
       .foreach { case (name, fn) =>
         dumpOne(spark, name, fn, sfDir, outDir).foreach(errors(name) = _)
       }
@@ -66,7 +68,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.iterator
+      .filter { case (name, _) => wanted(name) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val errJson = errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }

@@ -59,10 +59,8 @@ object UpsertOps {
     // construction), so the set difference is a safe driver-side step.
     val drained = touched.collect().map(_.get(0)).toSet --
       merged.select(partCol).distinct().collect().map(_.get(0)).toSet
-    val prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try merged.write.partitionBy(partCol).mode("overwrite").parquet(targetDir)
-    finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    merged.write.partitionBy(partCol).mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic").parquet(targetDir)
     if (drained.nonEmpty) {
       val conf = spark.sparkContext.hadoopConfiguration
       val fs = new org.apache.hadoop.fs.Path(targetDir).getFileSystem(conf)
@@ -145,10 +143,8 @@ object UpsertOps {
         .join(broadcast(toCompact), Seq(partCol), "left_semi")
         .repartition(col(partCol))
         .localCheckpoint(true)
-      val prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try slice.write.partitionBy(partCol).mode("overwrite").parquet(targetDir)
-      finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+      slice.write.partitionBy(partCol).mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic").parquet(targetDir)
     }
     vals
   }

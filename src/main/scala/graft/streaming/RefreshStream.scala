@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.weather.Warehouse
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -7,30 +8,26 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 /** Streaming refresh — the reference's manual re-run + 5-minute dashboard
   * poll (SURVEY.md §2 U3/C7) as a Structured Streaming job.
   *
-  * enriched parquet dir (append-only) → watermarked monthly aggregate →
-  * foreachBatch overwrite of the serving table. `Trigger.AvailableNow`
-  * gives the reference's "sync now" semantics (process everything, stop);
-  * `Trigger.ProcessingTime` gives the 5-minute cadence. State is bounded
-  * by the watermark: closed months age out of the agg state instead of
-  * accumulating forever — the property that matters on an unbounded
-  * 100 TB stream.
+  * enriched parquet dir (append-only) → `Warehouse.monthlyAgg` over
+  * `Warehouse.toDailyWeather` (the batch operator, run on the streaming
+  * frame) → foreachBatch overwrite of the serving table.
+  * `Trigger.AvailableNow` gives the reference's "sync now" semantics
+  * (process everything, stop); `Trigger.ProcessingTime` gives the 5-minute
+  * cadence. The `complete` output mode keeps every group in the
+  * aggregation state, so the state holds one row per (city, month): it
+  * grows with months of history, not with observations.
   */
 object RefreshStream {
 
   /** Build the streaming monthly aggregate over an enriched-layer
-    * directory (same schema as OpenMeteoIngest.enrich output). */
+    * directory (same schema as OpenMeteoIngest.enrich output). Its
+    * `warehouse_load_time` is the time the stream was built; [[start]]
+    * restamps it per micro-batch. */
   def monthlyAggStream(spark: SparkSession, enrichedPath: String): DataFrame = {
     val schema = spark.read.parquet(enrichedPath).schema
-    spark.readStream
-      .schema(schema)
-      .parquet(enrichedPath)
-      .withColumn("obs_ts", to_timestamp(col("timestamp"), "yyyy-MM-dd'T'HH:mm"))
-      .withWatermark("obs_ts", "35 days") // one month + slack: closed months expire from state
-      .groupBy(col("location.city").as("city"), date_trunc("month", col("obs_ts")).as("month"))
-      .agg(
-        avg(col("temperatureC")).as("avg_temp_c"),
-        sum(col("rainfallMm")).as("total_rain_mm"),
-        count(lit(1)).as("rows_loaded"))
+    val stream = spark.readStream.schema(schema).parquet(enrichedPath)
+    val loadTime = new java.sql.Timestamp(System.currentTimeMillis())
+    Warehouse.monthlyAgg(Warehouse.toDailyWeather(stream, loadTime), loadTime)
   }
 
   /** Run one refresh pass (AvailableNow) or a cadence (ProcessingTime),

@@ -1,9 +1,9 @@
 package graft.weather
 
-/** Canonical data model of the weather engine — SURVEY.md §1.
-  * One typed surface (`Dataset[EnrichedObservation]`) for the
-  * bronze→silver hop; the warehouse/aggregate layers stay DataFrames
-  * (their schemas are fixed by DDL, not by Scala types).
+/** Canonical constants of the weather engine — SURVEY.md §1: the
+  * reference's location and metadata stamp, and the catalog names. Every
+  * layer is a DataFrame; the enriched schema is built by
+  * `OpenMeteoIngest.enrich`, the warehouse schemas by `Warehouse`.
   */
 object Model {
 
@@ -21,29 +21,4 @@ object Model {
   val WarehouseDb = "weather_dw"
   val DailyWeatherTable = s"$WarehouseDb.daily_weather"
   val MonthlyAggTable = s"$WarehouseDb.monthly_agg"
-
-  final case class Location(city: String, state: String)
-
-  /** `fetchStocktonWeather.js:148-155` metadata stamp. */
-  final case class EtlMetadata(
-      source_timestamp: String,
-      source_database: String,
-      data_quality: String,
-      api_request_id: Option[String],
-      etl_batch_id: String,
-      author: String)
-
-  /** One enriched hourly observation (`fetchStocktonWeather.js:94-102`,
-    * `:189-193`). Nullability mirrors `toNumber`: rainfall/gust default 0,
-    * the rest stay null. */
-  final case class EnrichedObservation(
-      timestamp: String,
-      temperatureC: Option[Double],
-      temperatureF: Option[Double],
-      humidityPercent: Option[Double],
-      rainfallMm: Double,
-      windSpeedMps: Option[Double],
-      windGustMps: Double,
-      location: Location,
-      metadata: EtlMetadata)
 }

@@ -70,7 +70,12 @@ object Warehouse {
       .parquet(path)
 
   /** A1-A6 — THE core analytical query (`etlToClickHouse.js:157-173`):
-    * city × month, avg temp, total rain, count, audit literals, ordered.
+    * city × month, avg temp, total rain, count, audit literals.
+    * Unordered; readers sort: the reference's `ORDER BY` sets no stored
+    * order either, because the MergeTree key orders `monthly_agg`
+    * (SURVEY.md §1.5) and every reader sorts for itself. The one
+    * definition serves batch and stream alike (`RefreshStream` runs it
+    * on a streaming frame).
     * Divergence (documented, SURVEY.md §1.5): the reference INSERT-SELECTs
     * with no dedup so re-runs append duplicate months; this engine pairs
     * the same query result with overwrite semantics (writeMonthlyAgg),
@@ -88,9 +93,8 @@ object Warehouse {
         col("rows_loaded"),
         lit("incremental").as("load_mode"),
         lit(0).as("sync_interval_min"))
-      .orderBy("month", "city")
 
-  /** A6 with idempotent semantics: month-partition overwrite. */
+  /** A6 with idempotent semantics: overwrites the whole store. */
   def writeMonthlyAgg(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").parquet(path)
 

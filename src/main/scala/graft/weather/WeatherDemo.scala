@@ -19,7 +19,7 @@ object WeatherDemo {
     val daily = Warehouse.toDailyWeather(enriched, loadTime)
     val agg = Warehouse.monthlyAgg(daily, loadTime)
     println("=== monthly_agg ===")
-    agg.show(truncate = false)
+    agg.orderBy("month", "city").show(truncate = false)
 
     val cache = new ServingCache(spark, () => agg, ttlSec = 3600)
     cache.refreshNow()

@@ -125,11 +125,13 @@ object WeatherFidelity {
       .orderBy("etl_batch_id")
 
   /** A1-A6 through the REAL Warehouse.monthlyAgg over the float32 fact
-    * rows — exact because every summand is a quarter-unit dyadic. */
+    * rows — exact because every summand is a quarter-unit dyadic. The
+    * aggregate is unordered, so the oracle's total order is applied here. */
   def monthlyAgg(spark: SparkSession, dir: String): DataFrame =
     Warehouse.monthlyAgg(
       Warehouse.toDailyWeather(derivedEnriched(spark, dir), loadTime),
       loadTime)
+      .orderBy("month", "city")
 
   /** One ServingCache read at a controlled clock: refresh at t0, serve
     * at t0 + ageSec — C1/C2 (per-city split in month order), C3/C4

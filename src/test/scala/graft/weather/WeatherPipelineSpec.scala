@@ -260,6 +260,15 @@ class WeatherPipelineSpec extends SparkSpec {
     } == 1)
   }
 
+  test("publishing monthly_agg from a daily store read once starts at most 2 Spark jobs") {
+    val dir = tempDir("publish_daily")
+    Warehouse.writeDailyWeather(Warehouse.toDailyWeather(enriched, loadTime), dir)
+    val daily = spark.read.parquet(dir) // schema inferred before the window opens
+    val out = tempDir("publish_monthly")
+    assert(jobsDuring(Warehouse.writeMonthlyAgg(Warehouse.monthlyAgg(daily, loadTime), out)) <= 2)
+    assert(spark.read.parquet(out).count() == 2)
+  }
+
   test("an unknown city served from a valid cache is empty and starts no Spark job") {
     val cache = new ServingCache(spark, () => storedAgg, ttlSec = 1000L, clock = () => 0L)
     cache.refreshNow()
