@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import graft.tools.QueryProbe
 
 /** Benchmark entry point (driver-run per round → BENCH_r{N}.json).
@@ -75,7 +77,7 @@ object Bench {
     try {
       val src = scala.io.Source.fromFile("/proc/loadavg")
       try src.mkString.trim.split(" ").take(3).mkString(" ") finally src.close()
-    } catch { case _: Throwable => "" }
+    } catch { case NonFatal(_) => "" }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -118,7 +120,7 @@ object Bench {
         try {
           val r = probe.run(q, sfDir)
           Some(((r.startNs - suiteT0) / 1e9, r))
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           System.err.println(s"[bench] ${q.name} failed: ${QueryProbe.describe(e)}")
           None
         }

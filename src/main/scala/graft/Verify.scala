@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.control.NonFatal
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -17,14 +19,14 @@ object Verify {
       fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       None
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       val msg = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
       System.err.println(s"[verify] $name failed: $msg")
       try {
         import spark.implicits._
         Seq(msg).toDF("__graft_error").coalesce(1)
           .write.mode("overwrite").parquet(s"$outDir/$name")
-      } catch { case m: Throwable =>
+      } catch { case NonFatal(m) =>
         System.err.println(s"[verify] $name marker write failed: ${m.getMessage}")
       }
       Some(msg)

@@ -67,6 +67,28 @@ object SessionMemo {
     v.asInstanceOf[T]
   }
 
+  /** The one-entry form of [[apply]]: (`spark`, `site`) keeps only the
+    * entry of the latest `key`. A call with another key first drops the
+    * entry it replaces and frees what that holds. For values derived from
+    * a store's current version, which is never asked for again once the
+    * store has moved on. */
+  def latest[T](spark: SparkSession, site: String, key: Any)(build: => T): T = {
+    val sid = sessionId(spark)
+    cells.keySet.asScala.foreach {
+      case k @ (`sid`, `site`, other) if other != key => Option(cells.remove(k)).flatMap(_.value).foreach(free)
+      case _ =>
+    }
+    apply(spark, site, key)(build)
+  }
+
+  /** The value already built for (`spark`, `site`, `key`), counted as a
+    * hit; None, and nothing counted or built, if there is none. */
+  def get[T](spark: SparkSession, site: String, key: Any): Option[T] = {
+    val v = Option(cells.get((sessionId(spark), site, key))).flatMap(_.value)
+    v.foreach(_ => counts.merge(s"$site:${label(key)}", Stats(0, 1, 0), _ + _))
+    v.map(_.asInstanceOf[T])
+  }
+
   /** Plans print as their hash; tuples element-wise. */
   private def label(key: Any): String = key match {
     case p: LogicalPlan => f"plan#${p.hashCode}%08x"

@@ -71,7 +71,7 @@ final class QueryProbe private (spark: SparkSession) {
     try {
       val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
       bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       fellBack = true
       System.err.println("[ledger] WARN: listenerBus drain reflection " +
         s"failed (${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage)}); " +
@@ -219,7 +219,7 @@ object QueryProbe {
     val samples = queries.map { q =>
       q.name -> (1 to reps).flatMap { _ =>
         try { val r = probe.run(q, dir); out(r.json); Some(r.sec) }
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[probe] ${q.name} failed: ${describe(e)}"); None
         }
       }
@@ -236,18 +236,47 @@ object QueryProbe {
       s""""queries":$qs,"sf":"$dir"}""")
   }
 
+  /** Prints each query's physical plan through `out`. `initial` is the
+    * formatted plan as first planned, to check pushdown, pruning,
+    * broadcast and codegen before trusting a number; `final` runs the
+    * query once and prints the plan adaptive execution left (reused
+    * exchanges, broadcast demotion, skew splits and coalesced reads show
+    * only after execution), with its row count and wall seconds. */
+  private[graft] def plans(spark: SparkSession, dir: String, which: String,
+      queries: Seq[GraftQuery], out: String => Unit): Unit =
+    queries.foreach { q =>
+      out(s"\n========== ${q.name} ==========")
+      val df = q.build(spark, dir)
+      if (which == "initial") out(df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
+      else {
+        val t0 = System.nanoTime()
+        val rows = df.queryExecution.toRdd.count()
+        out(f"rows=$rows  wall=${(System.nanoTime() - t0) / 1e9}%.2fs")
+        out(df.queryExecution.executedPlan.toString)
+      }
+    }
+
   /** The measuring CLI:
     * `runMain graft.tools.QueryProbe <sfDir> [reps] [name,...|all]`
     * (defaults: Bench's rep count, every registry entry). Two sweeps at
-    * different scale factors feed `tools/scale_ratios.py`. */
+    * different scale factors feed `tools/scale_ratios.py`.
+    *
+    * With `--plan=initial` or `--plan=final` first, it prints plans
+    * instead ([[plans]]):
+    * `runMain graft.tools.QueryProbe --plan=initial|final <sfDir> [name,...|all]`
+    * (default: the headline queries). */
   def main(args: Array[String]): Unit = {
-    require(args.length >= 1 && args.length <= 3,
-      "usage: QueryProbe <sfDir> [reps] [name,...|all]")
-    val dir = args(0)
-    val reps = args.lift(1).fold(Bench.Reps)(_.toInt)
-    val queries = args.lift(2).filter(_ != "all")
-      .fold(Registry.all)(_.split(",").toSeq.map(Registry.byName))
+    val plan = args.headOption.collect { case a if a.startsWith("--plan=") => a.stripPrefix("--plan=") }
+    val rest = if (plan.isDefined) args.tail else args
+    require(plan.forall(Set("initial", "final")) && rest.length >= 1 && rest.length <= (if (plan.isDefined) 2 else 3),
+      "usage: QueryProbe <sfDir> [reps] [name,...|all] | QueryProbe --plan=initial|final <sfDir> [name,...|all]")
+    val dir = rest(0)
+    def named(arg: Option[String], default: Seq[GraftQuery]) =
+      arg.filter(_ != "all").fold(default)(_.split(",").toSeq.map(Registry.byName))
     val spark = GraftSession.get("graft-query-probe")
-    try sweep(spark, dir, reps, queries, println) finally spark.stop()
+    try plan match {
+      case Some(which) => plans(spark, dir, which, named(rest.lift(1), Registry.all.filter(_.headline)), println)
+      case None => sweep(spark, dir, rest.lift(1).fold(Bench.Reps)(_.toInt), named(rest.lift(2), Registry.all), println)
+    } finally spark.stop()
   }
 }

@@ -155,16 +155,26 @@ object WeatherFidelity {
       lit(r.count).as("n_rows"))
   }
 
+  private def rm(f: java.io.File): Unit = {
+    if (f.isDirectory) f.listFiles().foreach(rm)
+    f.delete(); ()
+  }
+
+  /** This JVM's scratch root, `java.io.tmpdir/graft_weather_<token>`: the
+    * token is drawn once per JVM, so two processes verifying the same
+    * fixture at once never share a store. Removed when the JVM exits. */
+  private lazy val scratchRoot: java.io.File = {
+    val d = new java.io.File(System.getProperty("java.io.tmpdir"),
+      "graft_weather_" + java.util.UUID.randomUUID().toString.take(8))
+    sys.addShutdownHook(rm(d))
+    d
+  }
+
   /** Per-fixture scratch store for the write-path roundtrips — rebuilt
     * from empty on every call so append-mode writes stay deterministic
     * across Verify reps. */
   private def scratchDir(tag: String, dir: String): String = {
-    val d = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_weather_${tag}_" + Integer.toHexString(dir.hashCode))
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(); ()
-    }
+    val d = new java.io.File(scratchRoot, s"${tag}_" + Integer.toHexString(dir.hashCode))
     if (d.exists()) rm(d)
     d.getAbsolutePath
   }

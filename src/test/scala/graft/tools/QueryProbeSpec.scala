@@ -60,4 +60,15 @@ class QueryProbeSpec extends SparkSpec {
     assert(canary.get("start").isNumber && canary.get("start").asDouble > 0, lines.last)
     assert(canary.get("end").isNumber && canary.get("end").asDouble > 0, lines.last)
   }
+
+  test("the CLI plan modes print the plan as first planned, and the final adaptive plan after a run") {
+    val q = Seq(Registry.byName("q6_filtered_agg"))
+    val initial, fin = ArrayBuffer.empty[String]
+    QueryProbe.plans(spark, Sf0001, "initial", q, initial += _)
+    QueryProbe.plans(spark, Sf0001, "final", q, fin += _)
+    assert(initial.head.contains("q6_filtered_agg") && fin.head.contains("q6_filtered_agg"))
+    assert(initial.mkString.contains("isFinalPlan=false"), initial.mkString("\n"))
+    assert(fin.exists(_.startsWith("rows=1 ")), fin.mkString("\n"))
+    assert(fin.mkString.contains("isFinalPlan=true"), fin.mkString("\n"))
+  }
 }

@@ -206,9 +206,9 @@ class WeatherPipelineSpec extends SparkSpec {
         "\"avg_temp_c\"").foreach(k => assert(env.contains(k), s"missing $k in $env"))
   }
 
-  /** A stored monthly_agg, read once: Stockton's months out of order and
-    * one month with no temperature (null avg_temp_c), plus a second city. */
-  private lazy val storedAgg = {
+  /** Stockton's months out of order and one month with no temperature
+    * (null avg_temp_c), plus a second city, as a driver-local frame. */
+  private def aggRows = {
     def ts(iso: String) = java.sql.Timestamp.from(java.time.Instant.parse(iso))
     val load = ts("2026-01-02T00:00:00Z")
     val rows = Seq(
@@ -218,10 +218,28 @@ class WeatherPipelineSpec extends SparkSpec {
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "city STRING, month TIMESTAMP, avg_temp_c FLOAT, total_rain_mm FLOAT, " +
         "warehouse_load_time TIMESTAMP, rows_loaded INT")
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  /** A stored monthly_agg of [[aggRows]] written by plain `df.write`, so
+    * the warehouse has no rows of it to remember, read once. */
+  private lazy val storedAgg = {
     val dir = tempDir("served_agg")
-    Warehouse.writeMonthlyAgg(spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema), dir)
+    aggRows.write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir)
   }
+
+  /** [[aggRows]] published through `Warehouse.writeMonthlyAgg`, then read
+    * once: the store version the warehouse just remembered. */
+  private def publishedAgg() = {
+    val dir = tempDir("published_agg")
+    Warehouse.writeMonthlyAgg(aggRows, dir)
+    spark.read.parquet(dir)
+  }
+
+  /** Rows of `df` in a total order, for set equality. */
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
 
   /** Spark jobs started while `body` runs, with the listener bus drained
     * before and after so no other window's events are counted. */
@@ -267,6 +285,81 @@ class WeatherPipelineSpec extends SparkSpec {
     val out = tempDir("publish_monthly")
     assert(jobsDuring(Warehouse.writeMonthlyAgg(Warehouse.monthlyAgg(daily, loadTime), out)) <= 2)
     assert(spark.read.parquet(out).count() == 2)
+  }
+
+  test("a daily version published three times starts at most 2, at most 3, then exactly 1 Spark job") {
+    val dir = tempDir("republish_daily")
+    Warehouse.writeDailyWeather(Warehouse.toDailyWeather(enriched, loadTime), dir)
+    val daily = spark.read.parquet(dir) // schema inferred before any window opens
+    val bounds = Seq[Int => Boolean](_ <= 2, _ <= 3, _ == 1)
+    bounds.zipWithIndex.foreach { case (bound, k) =>
+      val lt = new java.sql.Timestamp(loadTime.getTime + k * 60000L)
+      val out = tempDir(s"republish_monthly_$k")
+      val jobs = jobsDuring(Warehouse.writeMonthlyAgg(Warehouse.monthlyAgg(daily, lt), out))
+      assert(bound(jobs), s"publish ${k + 1} started $jobs jobs")
+      // a derived input is never remembered: this is the lazy recompute
+      val recompute = Warehouse.monthlyAgg(daily.filter(lit(true)), lt)
+      assert(sortedRows(spark.read.parquet(out)) == sortedRows(recompute), s"publish ${k + 1}")
+    }
+  }
+
+  test("after a batch is appended to daily the next publish and refresh equal a fresh recompute") {
+    val dir = tempDir("append_daily")
+    Warehouse.writeDailyWeather(Warehouse.toDailyWeather(enriched, loadTime), dir)
+    val out = tempDir("append_monthly")
+    @volatile var served = out
+    val cache = new ServingCache(spark, () => spark.read.parquet(served), ttlSec = 1000L, clock = () => 0L)
+    (1 to 3).foreach { _ => // the third publish writes driver-local rows
+      Warehouse.writeMonthlyAgg(Warehouse.monthlyAgg(spark.read.parquet(dir), loadTime), out)
+    }
+    cache.refreshNow()
+    val batch2 = OpenMeteoIngest.enrich(observations, sourceTimestamp = "2026-01-03T00:00:00.000Z",
+      apiRequestId = None, etlBatchId = "etl-test-2")
+    Warehouse.writeDailyWeather(Warehouse.toDailyWeather(batch2, loadTime), dir)
+    val next = tempDir("append_monthly_next")
+    Warehouse.writeMonthlyAgg(Warehouse.monthlyAgg(spark.read.parquet(dir), loadTime), next)
+    served = next
+    cache.refreshNow()
+    val fresh = Warehouse.monthlyAgg(spark.read.parquet(dir).filter(lit(true)), loadTime)
+    assert(sortedRows(spark.read.parquet(next)) == sortedRows(fresh))
+    assert(fresh.filter(col("city") === "Stockton").collect().map(_.getAs[Int]("rows_loaded")).sorted.toSeq == Seq(2, 8))
+    val want = fresh.filter(col("city") === "Stockton").select(
+      col("month"), col("avg_temp_c").cast("double"), col("total_rain_mm").cast("double"),
+      col("city"), col("warehouse_load_time"))
+    assert(sortedRows(cache.monthly("Stockton").data) == sortedRows(want))
+  }
+
+  test("a refresh of a store just published starts no Spark job and renders what a read of it renders") {
+    val published = publishedAgg()
+    var nowMs = 0L
+    val cache = new ServingCache(spark, () => published, ttlSec = 1000L, clock = () => nowMs)
+    assert(jobsDuring(cache.refreshNow()) == 0)
+    val queried = new ServingCache(spark, () => storedAgg, ttlSec = 1000L, clock = () => 0L)
+    queried.refreshNow()
+    Seq("Stockton", "Lodi", "Nowhere").foreach { city =>
+      val (a, b) = (cache.monthly(city), queried.monthly(city))
+      assert(a.source == "cache" && a.toJsonEnvelope == b.toJsonEnvelope, city)
+      assert(a.data.schema == b.data.schema, city)
+    }
+    assert(cache.status.dataCount == 3)
+    // a miss on the remembered store is still one warehouse query
+    nowMs = 1001 * 1000L
+    assert(jobsDuring {
+      val miss = cache.monthly("Stockton")
+      assert(miss.source == "warehouse" && miss.count == 2)
+      miss.toJsonEnvelope
+    } == 1)
+  }
+
+  test("a foreign overwrite of the published store before the refresh is served as the new rows") {
+    val dir = tempDir("foreign_agg")
+    Warehouse.writeMonthlyAgg(aggRows, dir)
+    aggRows.withColumn("rows_loaded", col("rows_loaded") + 100)
+      .withColumn("avg_temp_c", lit(1.5f)).write.mode("overwrite").parquet(dir)
+    val cache = new ServingCache(spark, () => spark.read.parquet(dir), ttlSec = 1000L, clock = () => 0L)
+    assert(jobsDuring(cache.refreshNow()) >= 1)
+    val rows = cache.monthly("Stockton").data.collect()
+    assert(rows.length == 2 && rows.forall(_.getAs[Double]("avg_temp_c") == 1.5))
   }
 
   test("an unknown city served from a valid cache is empty and starts no Spark job") {
